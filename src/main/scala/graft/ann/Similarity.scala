@@ -813,72 +813,20 @@ object Similarity {
 
   /** Compact a `batch_id=`-partitioned streamed IVF index
     * ([[graft.streaming.StreamingEvents.ivfIndexSink]]'s layout) back to
-    * ONE batch directory with one file per bucket —
-    * [[graft.text.Dedup.compactDedupIndex]]'s sibling: a long-running
-    * sink grows one file per bucket per batch, and listing cost
-    * eventually dominates queries. Crash-safe the same way: the
-    * consolidated partition (`batch_id = min - 1`, counting DOWN so it
-    * can never collide with stream-assigned ids) is fully written
-    * before old directories are deleted; a crash between the two leaves
-    * duplicate rows that the next compaction's `distinct()` absorbs and
-    * that query results are insensitive to (duplicate candidates rank
-    * identically; row_number keeps one). Returns the consolidated
-    * batch id. */
+    * ONE batch directory with one file per bucket — a long-running sink
+    * grows one file per bucket per batch, and listing cost eventually
+    * dominates queries. Layout, ledger, crash windows and target ids
+    * follow the [[graft.store.BatchStore]] contract; the consolidation
+    * step is a `distinct` re-bucketed by `centroid_id`. Returns the
+    * consolidated batch id. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"compactIvfIndex: no index at $indexDir")
-    val batchDirs = fs.listStatus(path).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-    require(batchDirs.nonEmpty,
-      s"compactIvfIndex: $indexDir has no batch_id=* partitions — not a " +
-        "streamed IVF index (write batches via ivfIndexSink)")
-    val ids = batchDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-    val tombs = ivfTombstones(spark, indexDir)
-    // a pending tombstone ledger always needs applying, even when the
-    // layout is already a single directory
-    if (batchDirs.length == 1 && tombs.isEmpty)
-      return ids.head // already compact
-    val compactTo = ids.min - 1
-    val all = spark.read.schema(ivfBatchedSchema).parquet(indexDir)
-      .drop("batch_id") // re-materialized by the target directory name
-    // apply + (below) clear the X191 delete ledger — the compacted
-    // index lacks the deleted points, so every crash window stays
-    // correct (the vec_id anti-join is idempotent against it) and a
-    // cleared ledger re-opens the ids for legitimate re-ingestion
-    val alive = tombs.fold(all)(t => all.join(
-      t.select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti"))
-    alive
-      .distinct()       // absorb crash-window leftovers (see scaladoc)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/batch_id=$compactTo")
-    batchDirs.foreach(d => fs.delete(d, true))
-    val tombDir = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    if (fs.exists(tombDir)) fs.delete(tombDir, true)
-    compactTo
-  }
+      indexDir: String): Long =
+    ivfStore(indexDir).compact(spark, "compactIvfIndex")(
+      _.drop("batch_id").distinct().repartition(col("centroid_id")))
 
-  /** The tombstone ledger of a delete-maintained IVF index — `None`
-    * until the first [[deleteFromIvfIndex]]. Sibling directory (the
-    * [[graft.text.Dedup.dedupTombstones]] layout: a subdir inside the
-    * index root would break its partition discovery). */
-  private[graft] def ivfTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.schema(ivfTombstoneSchema).parquet(p.toString))
-    else None
-  }
-
-  // Explicit IVF store schemas — the same footer-inference-skipping
-  // discipline as the k-NN store's readKnnIndex/readKnnEdges (guide §6:
-  // the layout is module-owned, so a bare spark.read.parquet pays a
-  // schema-inference job per re-open for information the module already
-  // knows). TWO layouts exist and both are module-written: the
+  // Explicit IVF store schemas — the layout is module-owned, so a bare
+  // spark.read.parquet would pay a schema-inference job per re-open for
+  // information the module already knows. TWO layouts exist and both are module-written: the
   // [[writeIvfIndex]] batch table (`centroid_id=C/` at the top level)
   // and the [[graft.streaming.StreamingEvents.ivfIndexSink]] streamed
   // form (`batch_id=B/centroid_id=C/`). The first-level directory name
@@ -900,11 +848,12 @@ object Similarity {
         "batch_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField(
         "centroid_id", org.apache.spark.sql.types.LongType)))
-  private val ivfTombstoneSchema = org.apache.spark.sql.types.StructType(
-    Seq(org.apache.spark.sql.types.StructField(
-      "vec_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField(
-        "batch_id", org.apache.spark.sql.types.LongType)))
+
+  /** The streamed IVF index as a [[graft.store.BatchStore]], with the
+    * sibling ledger `<indexDir>__tombstones`. */
+  private[graft] def ivfStore(indexDir: String): graft.store.BatchStore =
+    graft.store.BatchStore(indexDir, ivfBatchedSchema, "vec_id",
+      graft.store.BatchStore.ledgerBeside(indexDir), Seq("centroid_id"))
 
   /** Schema-pinned open of an IVF index directory: reads the layout tag
     * (the first-level partition directory name) and applies the matching
@@ -930,25 +879,21 @@ object Similarity {
     * the X188/X190 lifecycle leg for the retrieval store: a taken-down
     * embedding must stop surfacing as a neighbor, and the append-only
     * X76 index would return it forever. No recompute is needed (bucket
-    * rows are independent), so a delete is ONE ledger write;
-    * [[readIvfIndex]] is the canonical tombstone-aware read,
-    * [[compactIvfIndex]] applies + clears the ledger, and the
-    * streaming sink fails loud on resurrecting a tombstoned id
-    * pre-compaction — the shared maintained-store contract:
-    * append / tombstone-delete / compact(applies+clears). Works for
-    * both index layouts (the [[writeIvfIndex]] bucket-partitioned
-    * table and the streamed `batch_id=N` form). Replays overwrite
-    * their own batch directory: idempotent. */
+    * rows are independent), so a delete is ONE ledger write
+    * ([[graft.store.BatchStore]]); [[readIvfIndex]] is the canonical
+    * tombstone-aware read, [[compactIvfIndex]] applies + clears the
+    * ledger, and the streaming sink fails loud on resurrecting a
+    * tombstoned id pre-compaction. Works for both index layouts (the
+    * [[writeIvfIndex]] bucket-partitioned table and the streamed
+    * `batch_id=N` form). */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, deleted: DataFrame, idCol: String,
       batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"deleteFromIvfIndex: no index at $indexDir")
-    deleted.select(col(idCol).cast("long").as("vec_id")).distinct()
-      .write.mode("overwrite")
-      .parquet(s"${indexDir}__tombstones/batch_id=$batchId")
-    ()
+    val store = ivfStore(indexDir)
+    require(store.exists(spark), s"deleteFromIvfIndex: no index at $indexDir")
+    store.tombstone(
+      deleted.select(col(idCol).cast("long").as("vec_id")).distinct(),
+      batchId)
   }
 
   /** The canonical read of a delete-maintained IVF index: the stored
@@ -958,10 +903,8 @@ object Similarity {
     * ids, joined after the pruned scan). */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String): DataFrame = {
-    val idx = openIvfIndex(spark, indexDir)
-    ivfTombstones(spark, indexDir).fold(idx)(t =>
-      idx.join(broadcast(t.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_anti"))
+    val store = ivfStore(indexDir)
+    store.without(openIvfIndex(spark, indexDir), store.ledger(spark).rows)
   }
 
   /** Top-k over a PERSISTED index for a (bounded) query batch: queries
@@ -1718,16 +1661,7 @@ object Similarity {
     require(probes >= 1, s"probes must be >= 1, got $probes")
     val spark = newPoints.sparkSession
     ensureNative(newPoints)
-    // FIXED shard count for the physical layout — partitioning by the
-    // raw centroid_id looks right but is a scale killer the gate
-    // caught at its first sf1 probe (exponent 0.84): data-proportional
-    // centroids mean 10× data = 10× partition DIRECTORIES of
-    // ever-smaller files, and the per-file metadata cost turns the
-    // store linear-in-nlist. A capped shard keeps directory count
-    // CONSTANT as the corpus grows; cell pruning survives as shard
-    // pruning (×1/shards) plus the pushed centroid_id filter inside
-    // each shard's row groups.
-    val shards = 64
+    val index = KnnStore.index(storeDir)
     // persisted LOCALLY and released in the finally below — the
     // streaming sink invokes this once per micro-batch with no harness
     // release point, so session-lifetime tracking
@@ -1739,36 +1673,19 @@ object Similarity {
     var allMeta: DataFrame = null
     var slice: DataFrame = null
     try {
-    newA.withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      .repartition(col("__shard"))
-      .write.mode("overwrite").partitionBy("__shard")
-      .parquet(s"$storeDir/index/batch_id=$batchId")
+    index.write(newA.withColumn("__shard", KnnStore.shard)
+      .repartition(col("__shard")), batchId)
     // prior corpus = strictly earlier batches (replay-idempotent),
     // minus earlier tombstones ([[knnGraphDelete]]); the index dir
     // always exists — this batch just wrote to it
-    val dead = knnTombstones(spark, storeDir)
-      .map(_.filter(col("batch_id") < batchId).select(col("vec_id")))
-    dead.foreach { d =>
-      // re-ingesting a tombstoned id would resurrect a point the view
-      // anti-joins away — silent wrongness; the contract is fail loud
-      // (compact or refresh clears tombstones, after which the id may
-      // return). Bounded: limit(1).
-      val re = newA.select(col("vec_id")).distinct()
-        .join(d, Seq("vec_id")).limit(1).collect()
-      require(re.isEmpty,
-        s"knnGraphIncrement: id ${re.head.getLong(0)} was tombstoned " +
-          "by knnGraphDelete — run compactKnnStore (or knnGraphRefresh) " +
-          "before re-ingesting a deleted id")
-    }
-    val prior0 = readKnnIndex(spark, storeDir)
-      .filter(col("batch_id") < batchId)
-      .drop("batch_id")
-    val prior = dead.fold(prior0)(d =>
-      prior0.join(d, Seq("vec_id"), "left_anti"))
-    val all = prior
-      .withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      .unionByName(
-        newA.withColumn("__shard", pmod(col("centroid_id"), lit(shards))))
+    val dead = index.ledger(spark).rows
+      .map(_.filter(col("batch_id") < batchId))
+    index.requireNotTombstoned(newA, dead, "knnGraphIncrement",
+      "compactKnnStore (or knnGraphRefresh)")
+    val all = index.without(index.read(spark)
+        .filter(col("batch_id") < batchId).drop("batch_id"), dead)
+      .withColumn("__shard", KnnStore.shard)
+      .unionByName(newA.withColumn("__shard", KnnStore.shard))
     // touched cells stay a (≤ nlist row) DataFrame derived from the
     // cached newA (recomputed per consumer — a distinct over the cache,
     // not itself persisted; cheap enough that pinning it never paid in
@@ -1776,8 +1693,6 @@ object Similarity {
     // collected array cost one driver round-trip per increment and was
     // only a pruning hint on scans that now read the metadata cache
     val touchedCells = newA.select(col("centroid_id")).distinct()
-    def shardsOf(cs: Array[Long]): Array[Long] =
-      cs.map(c => ((c % shards) + shards) % shards).distinct
     // discovery runs over ONE persisted metadata-width projection
     // (vec_id, centroid_id, __shard — no vector bytes): the store is
     // scanned once for discovery instead of once per derived question
@@ -1807,7 +1722,7 @@ object Similarity {
     // the recompute slice covers EVERY cell an affected source probes,
     // so each recomputed top-k sees its complete candidate set
     val cells = stats.map(_.getLong(0))
-    slice = all.filter(col("__shard").isin(shardsOf(cells): _*) &&
+    slice = all.filter(col("__shard").isin(KnnStore.shardsOf(cells): _*) &&
         col("centroid_id").isin(cells: _*))
       .drop("__shard")
       .persist()
@@ -1816,8 +1731,7 @@ object Similarity {
     // cache instead of re-scanning the store
     val src = slice.join(touchedCells, Seq("centroid_id"), "left_semi")
       .select(col("vec_id")).distinct()
-    recomputeKnnEdges(slice, src, k)
-      .write.mode("overwrite").parquet(s"$storeDir/edges/batch_id=$batchId")
+    KnnStore.edges(storeDir).write(recomputeKnnEdges(slice, src, k), batchId)
     } finally {
       newA.unpersist(true)
       if (allMeta != null) allMeta.unpersist(true)
@@ -1875,65 +1789,67 @@ object Similarity {
   private def knnEdgesAll(asg: DataFrame, k: Int): DataFrame =
     knnRankTopK(knnPairCosines(asg), k)
 
-  /** The tombstone ledger of a [[knnGraphDelete]]-maintained store —
-    * `None` until the first delete. One (vec_id, batch_id) row per
-    * deleted id; cleared by [[compactKnnStore]]/[[knnGraphRefresh]]
-    * once applied. */
-  private[graft] def knnTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      Some(spark.read.schema(knnTombstoneSchema).parquet(p.toString))
-    else None
-  }
+  /** The maintained k-NN store's layout: two [[graft.store.BatchStore]]
+    * sides, `<store>/index` (probe assignments, vectors included) and
+    * `<store>/edges`, sharing the ledger `<store>/tombstones`, whose
+    * (vec_id, batch_id) rows [[knnGraphDelete]] writes. */
+  private[graft] object KnnStore {
+    // FIXED shard count for the index layout — partitioning by the raw
+    // centroid_id looks right but is a scale killer the gate caught at
+    // its first sf1 probe (exponent 0.84): data-proportional centroids
+    // mean 10× data = 10× partition DIRECTORIES of ever-smaller files,
+    // and the per-file metadata cost turns the store linear-in-nlist.
+    // A capped shard keeps directory count CONSTANT as the corpus
+    // grows; cell pruning survives as shard pruning (×1/Shards) plus
+    // the pushed centroid_id filter inside each shard's row groups.
+    val Shards = 64
 
-  // Explicit store schemas: the maintained-store layout is module-owned
-  // and fixed, so every read skips the parquet footer-inference job a
-  // bare spark.read.parquet pays per call — the lifecycle composites
-  // re-open these paths several times per maintenance step and the
-  // saved jobs add up (guide §1.2: per-task/per-job overhead after the
-  // algorithm is right). Partition columns (batch_id, __shard) are
-  // declared so directory discovery casts instead of inferring.
-  private val knnIndexSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("v", ArrayType(DoubleType, containsNull = false)),
-      StructField("nrm", DoubleType),
-      StructField("probe", IntegerType),
-      StructField("centroid_id", LongType),
-      StructField("__shard", LongType),
-      StructField("batch_id", LongType)))
-  }
-  private val knnEdgesSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("rk", LongType),
-      StructField("neighbor_id", LongType),
-      StructField("cosine", DoubleType),
-      StructField("batch_id", LongType)))
-  }
-  private val knnTombstoneSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("batch_id", LongType)))
-  }
+    /** The `__shard` partition value of an assignment row. */
+    def shard: Column = pmod(col("centroid_id"), lit(Shards))
 
-  /** Schema-pinned read of a maintained store's assignment index. */
-  private[graft] def readKnnIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame =
-    spark.read.schema(knnIndexSchema).parquet(s"$storeDir/index")
+    /** The shards holding `cells`. */
+    def shardsOf(cells: Array[Long]): Array[Long] =
+      cells.map(c => ((c % Shards) + Shards) % Shards).distinct
 
-  /** Schema-pinned read of a maintained store's edge side. */
-  private[graft] def readKnnEdges(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame =
-    spark.read.schema(knnEdgesSchema).parquet(s"$storeDir/edges")
+    private def ledger(storeDir: String) = s"$storeDir/tombstones"
+
+    def index(storeDir: String): graft.store.BatchStore = {
+      import org.apache.spark.sql.types._
+      graft.store.BatchStore(s"$storeDir/index", StructType(Seq(
+        StructField("vec_id", LongType),
+        StructField("v", ArrayType(DoubleType, containsNull = false)),
+        StructField("nrm", DoubleType),
+        StructField("probe", IntegerType),
+        StructField("centroid_id", LongType),
+        StructField("__shard", LongType),
+        StructField("batch_id", LongType))), "vec_id", ledger(storeDir),
+        Seq("__shard"))
+    }
+
+    def edges(storeDir: String): graft.store.BatchStore = {
+      import org.apache.spark.sql.types._
+      graft.store.BatchStore(s"$storeDir/edges", StructType(Seq(
+        StructField("vec_id", LongType),
+        StructField("rk", LongType),
+        StructField("neighbor_id", LongType),
+        StructField("cosine", DoubleType),
+        StructField("batch_id", LongType))), "vec_id", ledger(storeDir))
+    }
+
+    /** Each source's edges from the LATEST batch that recomputed it,
+      * via ONE window over ONE scan (a groupBy(max) + join-back scans
+      * the edges twice and shuffles twice for the same row set). The
+      * `rk = 0` rows are [[knnGraphDelete]]'s empty-recompute
+      * sentinels: they win the selection, masking the stale pre-delete
+      * rows, and are dropped here. */
+    def latest(edges: DataFrame): DataFrame =
+      edges.withColumn("__mx",
+          max(col("batch_id")).over(Window.partitionBy(col("vec_id"))))
+        .filter(col("batch_id") === col("__mx"))
+        .filter(col("rk") >= 1)
+        .select(col("vec_id"), col("rk"), col("neighbor_id"),
+          col("cosine"))
+  }
 
   /** X188: TOMBSTONE DELETES in the maintained k-NN store — production
     * corpora shrink (takedowns, dedup purges), and an append-only
@@ -1966,20 +1882,16 @@ object Similarity {
       maxBucketPoints: Long = 100000L): Unit = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = deleted.sparkSession
-    val shards = 64
+    val index = KnnStore.index(storeDir)
     val del = deleted.select(col(idCol).cast("long").as("vec_id"))
       .distinct().persist()
     var aliveMeta: DataFrame = null
     var slice: DataFrame = null
     var recomputed: DataFrame = null
     try {
-      val dead = knnTombstones(spark, storeDir)
-        .map(_.filter(col("batch_id") < batchId).select(col("vec_id")))
-      val idx0 = readKnnIndex(spark, storeDir)
-        .filter(col("batch_id") < batchId)
-        .drop("batch_id")
-      val alive0 = dead.fold(idx0)(d =>
-        idx0.join(d, Seq("vec_id"), "left_anti"))
+      val alive0 = index.without(index.read(spark)
+          .filter(col("batch_id") < batchId).drop("batch_id"),
+        index.ledger(spark).rows.map(_.filter(col("batch_id") < batchId)))
       // discovery runs over ONE persisted metadata-width projection
       // (vec_id, centroid_id — no vector bytes): the store is scanned
       // once for the touched/cells/census questions instead of once
@@ -1992,9 +1904,7 @@ object Similarity {
         .select(col("centroid_id")).distinct()
         .collect().map(_.getLong(0))
       val alive = alive0.join(del, Seq("vec_id"), "left_anti")
-        .withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      def shardsOf(cs: Array[Long]): Array[Long] =
-        cs.map(c => ((c % shards) + shards) % shards).distinct
+        .withColumn("__shard", KnnStore.shard)
       if (touched.nonEmpty) {
         // affected sources: surviving points probing a touched cell
         val srcIds = aliveMeta.join(del, Seq("vec_id"), "left_anti")
@@ -2019,7 +1929,8 @@ object Similarity {
             "join is O(m²); train more centroids, lower probes, or " +
             "sample")
         val cells = stats.map(_.getLong(0))
-        slice = alive.filter(col("__shard").isin(shardsOf(cells): _*) &&
+        slice = alive.filter(
+            col("__shard").isin(KnnStore.shardsOf(cells): _*) &&
             col("centroid_id").isin(cells: _*))
           .drop("__shard")
           .persist()
@@ -2036,12 +1947,10 @@ object Similarity {
           .select(col("vec_id"), lit(0L).as("rk"),
             lit(null).cast("long").as("neighbor_id"),
             lit(null).cast("double").as("cosine"))
-        recomputed.unionByName(sentinels)
-          .write.mode("overwrite")
-          .parquet(s"$storeDir/edges/batch_id=$batchId")
+        KnnStore.edges(storeDir)
+          .write(recomputed.unionByName(sentinels), batchId)
       }
-      del.write.mode("overwrite")
-        .parquet(s"$storeDir/tombstones/batch_id=$batchId")
+      index.tombstone(del, batchId)
     } finally {
       del.unpersist(true)
       if (aliveMeta != null) aliveMeta.unpersist(true)
@@ -2052,83 +1961,24 @@ object Similarity {
   }
 
   /** Compact a [[knnGraphIncrement]]/[[knnGraphDelete]]-maintained
-    * store back to ONE batch directory per side and ZERO tombstones —
-    * [[compactIvfIndex]]'s sibling for the X185 store. The store grows
-    * one `index/batch_id=N` and `edges/batch_id=N` directory per
-    * micro-batch FOREVER, and the view lists every one of them —
-    * linear-in-batch-count metadata cost that the sf-probe cannot see
-    * (it scales rows, not batch count; the r15 verdict's exact
-    * warning). Compaction collapses: index → surviving assignments
-    * (tombstones applied, crash-window duplicates absorbed by
-    * `distinct`) into `index/batch_id=<min-1>`; edges → each surviving
-    * source's LATEST rows (the view's own selection, `rk = 0`
-    * sentinels dropped — with pre-sentinel history gone they mask
-    * nothing) into `edges/batch_id=<min-1>`; tombstone ledger →
-    * deleted (applied). Ids count DOWN from the side's own min so they
-    * can never collide with stream-assigned ids, and
+    * store back to ONE batch directory per side and ZERO tombstones.
+    * The store grows one `index/batch_id=N` and `edges/batch_id=N`
+    * directory per micro-batch FOREVER, and the view lists every one of
+    * them — linear-in-batch-count metadata cost that the sf-probe
+    * cannot see (it scales rows, not batch count). Layout, ledger, crash
+    * windows and target ids follow the [[graft.store.BatchStore]]
+    * contract; the consolidation steps are: index → surviving
+    * assignments, `distinct` per shard; edges → each surviving source's
+    * LATEST rows (the view's own selection, `rk = 0` sentinels dropped —
+    * with pre-sentinel history gone they mask nothing).
     * [[knnGraphIncrement]]'s `batch_id < N` prior-corpus read keeps
-    * working unchanged.
-    *
-    * Crash-safe like its siblings: both consolidated directories are
-    * fully written before anything is deleted; leftovers from a crash
-    * window are absorbed (old edge dirs outrank the consolidated one
-    * per source with IDENTICAL rows; duplicate index rows fall to the
-    * pair join's `distinct`; an undeleted ledger anti-joins ids the
-    * compacted store no longer contains). Run while the sink is idle
-    * (the [[compactIvfIndex]] contract). Returns the consolidated
-    * edges batch id. */
+    * working unchanged. Returns the consolidated edges batch id. */
   def compactKnnStore(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): Long = {
-    val shards = 64
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def batchDirs(side: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/$side")
-      require(fs.exists(p), s"compactKnnStore: no $side at $storeDir")
-      val ds = fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-      require(ds.nonEmpty, s"compactKnnStore: $storeDir/$side has no " +
-        "batch_id=* partitions — not a knnGraphIncrement store")
-      ds
-    }
-    val idxDirs = batchDirs("index")
-    val edgeDirs = batchDirs("edges")
-    def ids(ds: Array[org.apache.hadoop.fs.Path]) =
-      ds.map(_.getName.stripPrefix("batch_id=").toLong)
-    val tombs = knnTombstones(spark, storeDir)
-    val tombDir = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones")
-    if (idxDirs.length == 1 && edgeDirs.length == 1 && tombs.isEmpty)
-      return ids(edgeDirs).head // already compact
-    val dead = tombs.map(_.select(col("vec_id")).distinct())
-    val idxTo = ids(idxDirs).min - 1
-    val aliveIdx = {
-      val i0 = readKnnIndex(spark, storeDir).drop("batch_id")
-      dead.fold(i0)(d => i0.join(d, Seq("vec_id"), "left_anti"))
-    }
-    aliveIdx.drop("__shard").distinct()
-      .withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-      .repartition(col("__shard"))
-      .write.mode("overwrite").partitionBy("__shard")
-      .parquet(s"$storeDir/index/batch_id=$idxTo")
-    val edgeTo = ids(edgeDirs).min - 1
-    val e0 = readKnnEdges(spark, storeDir)
-    val live = dead.fold(e0)(d => e0.join(d, Seq("vec_id"), "left_anti"))
-    // latest batch per source via ONE window over ONE scan — the old
-    // groupBy(max) + join-back read the edge store twice and shuffled
-    // twice for the same row set
-    live.withColumn("__mx",
-        max(col("batch_id")).over(Window.partitionBy(col("vec_id"))))
-      .filter(col("batch_id") === col("__mx"))
-      .filter(col("rk") >= 1)
-      .select(col("vec_id"), col("rk"), col("neighbor_id"),
-        col("cosine"))
-      .write.mode("overwrite")
-      .parquet(s"$storeDir/edges/batch_id=$edgeTo")
-    idxDirs.foreach(d => fs.delete(d, true))
-    edgeDirs.foreach(d => fs.delete(d, true))
-    if (fs.exists(tombDir)) fs.delete(tombDir, true)
-    edgeTo
-  }
+      storeDir: String): Long =
+    graft.store.BatchStore.compact(spark, "compactKnnStore", Seq(
+      KnnStore.index(storeDir) -> (_.drop("batch_id", "__shard").distinct()
+        .withColumn("__shard", KnnStore.shard).repartition(col("__shard"))),
+      KnnStore.edges(storeDir) -> KnnStore.latest)).last
 
   /** CENTROID-REFRESH EPOCH for the maintained k-NN store (the third
     * lifecycle leg after [[knnGraphDelete]] and [[compactKnnStore]]):
@@ -2165,38 +2015,23 @@ object Similarity {
       maxBucketPoints: Long = 100000L, recallFloor: Double = 0.0,
       recallSample: Int = 0): Long = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val shards = 64
-    val fs = new org.apache.hadoop.fs.Path(storeDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def dirs(side: String) = {
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/$side")
-      require(fs.exists(p), s"knnGraphRefresh: no $side at $storeDir")
-      fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-    }
-    val idxDirs = dirs("index")
-    val edgeDirs = dirs("edges")
-    require(idxDirs.nonEmpty && edgeDirs.nonEmpty,
-      s"knnGraphRefresh: $storeDir is not a knnGraphIncrement store")
+    val edges = KnnStore.edges(storeDir)
+    val rw = new graft.store.BatchStore.Rewrite(spark, "knnGraphRefresh",
+      Seq(KnnStore.index(storeDir), edges))
     val cents = newCentroids.select(col(idCol).cast("long").as("vec_id"),
       col(vecCol).cast("array<double>").as("v"))
-    val corpus = knnStoreCorpus(spark, storeDir).persist()
+    val corpus = rw.live(0).select(col("vec_id"), col("v"))
+      .dropDuplicates("vec_id").persist()
     var asg: DataFrame = null
     try {
-      val idxTo = idxDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-        .min - 1
-      val edgeTo = edgeDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-        .min - 1
       // the corpus is assigned to the new centroids exactly ONCE: the
       // index write and the edge rebuild share the persisted
       // assignment (the old shape ran ivfAssignProbes twice — once for
       // the index, once inside knnGraph)
       asg = ivfAssignProbes(corpus, "vec_id", "v", cents, dim, probes)
         .persist()
-      asg.withColumn("__shard", pmod(col("centroid_id"), lit(shards)))
-        .repartition(col("__shard"))
-        .write.mode("overwrite").partitionBy("__shard")
-        .parquet(s"$storeDir/index/batch_id=$idxTo")
+      rw.write(0, asg.withColumn("__shard", KnnStore.shard)
+        .repartition(col("__shard")))
       // the one-shot knnGraph's O(m²) census guard, over the shared
       // assignment (one job on the cache); same failure contract
       val over = asg.groupBy(col("centroid_id"))
@@ -2208,20 +2043,16 @@ object Similarity {
           s"${over.head.getLong(1)} probe-assigned points > " +
           s"maxBucketPoints=$maxBucketPoints — the per-cell pair join " +
           "is O(m²); train more centroids, lower probes, or sample")
-      knnEdgesAll(asg, k)
-        .write.mode("overwrite")
-        .parquet(s"$storeDir/edges/batch_id=$edgeTo")
-      idxDirs.foreach(d => fs.delete(d, true))
-      edgeDirs.foreach(d => fs.delete(d, true))
-      val tombDir = new org.apache.hadoop.fs.Path(s"$storeDir/tombstones")
-      if (fs.exists(tombDir)) fs.delete(tombDir, true)
+      rw.write(1, knnEdgesAll(asg, k))
+      rw.commit()
+      val edgeTo = rw.targets(1)
       if (recallSample > 0) {
         // deterministic sample: the recallSample smallest source ids —
         // reproducible across reruns, no RNG in the gate
         val sample = corpus.orderBy(col("vec_id")).limit(recallSample)
         val truth = bruteForceTopK(sample, corpus, "vec_id", "v", k, dim)
           .select(col("vec_id"), col("neighbor_id"))
-        val got = spark.read.parquet(s"$storeDir/edges/batch_id=$edgeTo")
+        val got = edges.read(spark).filter(col("batch_id") === edgeTo)
           .join(sample.select(col("vec_id")), Seq("vec_id"), "left_semi")
           .select(col("vec_id"), col("neighbor_id"))
         val hit = truth.join(got, Seq("vec_id", "neighbor_id")).count()
@@ -2241,18 +2072,6 @@ object Similarity {
     }
   }
 
-  /** The surviving (vec_id, v) corpus of a maintained store, read back
-    * from its own index (vectors live there), tombstones applied —
-    * one row per point (multi-probe rows collapse). */
-  private[graft] def knnStoreCorpus(
-      spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val idx = readKnnIndex(spark, storeDir)
-      .select(col("vec_id"), col("v")).dropDuplicates("vec_id")
-    knnTombstones(spark, storeDir).fold(idx)(t =>
-      idx.join(t.select(col("vec_id")), Seq("vec_id"), "left_anti"))
-  }
-
   /** [[knnGraphRefresh]] gated on a MEASURED drift signal instead of a
     * schedule: the store's surviving corpus is compared to the frozen
     * `reference` snapshot dimension-by-dimension ([[embeddingDimDrift]]
@@ -2270,9 +2089,9 @@ object Similarity {
       recallSample: Int = 0): Boolean = {
     require(sigmaThreshold > 0,
       s"sigmaThreshold must be > 0, got $sigmaThreshold")
-    val corpus = knnStoreCorpus(spark, storeDir)
-    val drift = embeddingDimDrift(
-      reference.select(col(refVecCol).as("v")), corpus.select(col("v")),
+    val drift = embeddingDimDrift(reference.select(col(refVecCol).as("v")),
+      KnnStore.index(storeDir).live(spark).select(col("vec_id"), col("v"))
+        .dropDuplicates("vec_id").select(col("v")),
       "v", dim)
     val worst = drift
       .agg(max(abs(coalesce(col("std_shift"), lit(0.0)))).as("__w"))

@@ -77,14 +77,34 @@ object StreamingEvents {
   def scd2Sink(incoming: DataFrame, store: graft.load.Scd2Store,
       table: String, mkConfig: Long => graft.load.MergeConfig,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
+    startSink(incoming, checkpointDir) { (batch, batchId) =>
+      val cfg = mkConfig(batchId)
+      require(cfg.isDelta, "streaming SCD2 ingest must be a delta load")
+      if (!batch.isEmpty) { store.runLoad(table, batch, cfg); () }
+    }
+
+  /** Starts `df`'s streaming query with its checkpoint at
+    * `checkpointDir`, running `f` on each micro-batch and its id. */
+  private def startSink(df: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    df.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val cfg = mkConfig(batchId)
-        require(cfg.isDelta, "streaming SCD2 ingest must be a delta load")
-        if (!batch.isEmpty) { store.runLoad(table, batch, cfg); () }
+        f(batch.toDF(), batchId)
       }
       .start()
+
+  /** The `*Sink` wrapper: [[startSink]] with empty micro-batches skipped,
+    * so a trigger that brings no rows writes no `batch_id=` directory
+    * and runs no batch kernel. A replayed micro-batch (at-least-once)
+    * keeps its id, so a kernel that overwrites `batch_id=<id>` is
+    * idempotent. */
+  private[graft] def batchSink(df: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startSink(df, checkpointDir)((batch, batchId) =>
+      if (!batch.isEmpty) f(batch, batchId))
 
   /** X20/X22 streaming: continuous corpus ingestion deduplicated against
     * the PERSISTED dedup index, with the index maintained append-only —
@@ -131,14 +151,9 @@ object StreamingEvents {
       indexDir: String, verdictDir: String, checkpointDir: String,
       shingleN: Int = 3, k: Int = 16, bands: Int = 4,
       minMatch: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          dedupBatch(batch.toDF(), batchId, idCol, textCol, indexDir,
-            verdictDir, shingleN, k, bands, minMatch)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      dedupBatch(_, _, idCol, textCol, indexDir, verdictDir, shingleN, k,
+        bands, minMatch))
 
   /** One micro-batch of [[incrementalDedupSink]] — package-private so the
     * replay-idempotence spec can invoke the same batch twice and prove a
@@ -147,26 +162,16 @@ object StreamingEvents {
       idCol: String, textCol: String, indexDir: String, verdictDir: String,
       shingleN: Int, k: Int, bands: Int, minMatch: Int): Unit = {
     val spark = batch.sparkSession
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // re-ingesting a tombstoned id ([[graft.text.Dedup
-    // .deleteFromDedupIndex]]) would index rows the canonical read
-    // anti-joins away — silent wrongness; fail loud until
-    // compactDedupIndex applies + clears the ledger (the X188
-    // resurrection contract). Bounded: limit(1).
-    graft.text.Dedup.dedupTombstones(spark, indexDir).foreach { t =>
-      val re = batch.select(col(idCol).cast("long").as("doc_id"))
-        .distinct()
-        .join(t.select(col("doc_id")).distinct(), Seq("doc_id"))
-        .limit(1).collect()
-      require(re.isEmpty,
-        s"incrementalDedupSink: doc ${re.head.getLong(0)} was " +
-          "tombstoned by deleteFromDedupIndex — run compactDedupIndex " +
-          "before re-ingesting a deleted id")
-    }
+    val store = graft.text.Dedup.dedupStore(indexDir)
+    // the whole ledger applies (see graft.store.BatchStore); the same
+    // rows feed the canonical read below
+    val dead = store.ledger(spark).rows
+    store.requireNotTombstoned(
+      batch.select(col(idCol).cast("long").as("doc_id")), dead,
+      "incrementalDedupSink", "compactDedupIndex")
     val index =
-      if (fs.exists(path))
-        graft.text.Dedup.readDedupIndex(spark, indexDir)
+      if (store.exists(spark))
+        store.without(store.read(spark), dead)
           // a failed attempt of THIS batch may have appended its rows
           // already; they must not verdict the replay
           .join(broadcast(batch.select(col(idCol).as("doc_id"))),
@@ -182,10 +187,8 @@ object StreamingEvents {
     val fresh = batch.join(
       verdicts.filter(col("verdict") === "new")
         .select(col("doc_id").as(idCol)), Seq(idCol), "left_semi")
-    graft.text.Dedup
-      .buildDedupIndex(fresh, idCol, textCol, shingleN, k, bands)
-      .write.mode("overwrite")
-      .parquet(s"$indexDir/batch_id=$batchId")
+    store.write(graft.text.Dedup
+      .buildDedupIndex(fresh, idCol, textCol, shingleN, k, bands), batchId)
     verdicts.unpersist()
     graft.util.Caches.releaseAll(spark)
     ()
@@ -206,14 +209,8 @@ object StreamingEvents {
   def spanDedupSink(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, spanDir: String, checkpointDir: String,
       windowTokens: Int = 8): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          spanBatch(batch.toDF(), batchId, idCol, textCol, indexDir,
-            spanDir, windowTokens)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      spanBatch(_, _, idCol, textCol, indexDir, spanDir, windowTokens))
 
   /** One micro-batch of [[spanDedupSink]] — package-private for the
     * replay-idempotence spec. */
@@ -259,40 +256,23 @@ object StreamingEvents {
   def ivfIndexSink(embs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, dim: Int, indexDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          ivfIndexBatch(batch.toDF(), batchId, idCol, vecCol, centroids,
-            dim, indexDir)
-      }
-      .start()
+    batchSink(embs, checkpointDir)(
+      ivfIndexBatch(_, _, idCol, vecCol, centroids, dim, indexDir))
 
   /** One micro-batch of [[ivfIndexSink]] — package-private for the
     * parity/replay spec. */
   private[graft] def ivfIndexBatch(batch: DataFrame, batchId: Long,
       idCol: String, vecCol: String, centroids: DataFrame, dim: Int,
       indexDir: String): Unit = {
-    val spark = batch.sparkSession
-    // the X191 resurrection contract (see deleteFromIvfIndex): a
-    // tombstoned id must not be re-ingested until compactIvfIndex
-    // applies + clears the ledger. Bounded: limit(1).
-    graft.ann.Similarity.ivfTombstones(spark, indexDir).foreach { t =>
-      val re = batch.select(col(idCol).cast("long").as("vec_id"))
-        .distinct()
-        .join(t.select(col("vec_id")).distinct(), Seq("vec_id"))
-        .limit(1).collect()
-      require(re.isEmpty,
-        s"ivfIndexSink: vec ${re.head.getLong(0)} was tombstoned by " +
-          "deleteFromIvfIndex — run compactIvfIndex before " +
-          "re-ingesting a deleted id")
-    }
-    graft.ann.Similarity
+    val store = graft.ann.Similarity.ivfStore(indexDir)
+    // the whole ledger applies (see graft.store.BatchStore)
+    store.requireNotTombstoned(
+      batch.select(col(idCol).cast("long").as("vec_id")),
+      store.ledger(batch.sparkSession).rows, "ivfIndexSink",
+      "compactIvfIndex")
+    store.write(graft.ann.Similarity
       .buildIvfIndex(batch, idCol, vecCol, centroids, dim)
-      .repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$indexDir/batch_id=$batchId")
-    ()
+      .repartition(col("centroid_id")), batchId)
   }
 
   /** X45 streaming: CCNet line dedup maintained over micro-batches —
@@ -309,13 +289,8 @@ object StreamingEvents {
   def lineDedupSink(docs: DataFrame, idCol: String, textCol: String,
       indexDir: String, outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          lineBatch(batch.toDF(), batchId, idCol, textCol, indexDir, outDir)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      lineBatch(_, _, idCol, textCol, indexDir, outDir))
 
   /** One micro-batch of [[lineDedupSink]] — package-private for the
     * replay-idempotence and batch-parity specs. */
@@ -364,13 +339,8 @@ object StreamingEvents {
   def vocabularySink(docs: DataFrame, idCol: String, textCol: String,
       statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) vocabularyBatch(batch.toDF(), batchId, idCol,
-          textCol, statsDir)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      vocabularyBatch(_, _, idCol, textCol, statsDir))
 
   /** One micro-batch of [[vocabularySink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -397,13 +367,9 @@ object StreamingEvents {
       idCol: String, textCol: String, acceptLabel: String,
       minMargin: Double, outDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) classifierBatch(batch.toDF(), batchId, model,
-          idCol, textCol, acceptLabel, minMargin, outDir)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      classifierBatch(_, _, model, idCol, textCol, acceptLabel, minMargin,
+        outDir))
 
   /** One micro-batch of [[classifierSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -436,13 +402,8 @@ object StreamingEvents {
   def heavyHitterSink(docs: DataFrame, groupCol: String, textCol: String,
       k: Int, statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) heavyHitterBatch(batch.toDF(), batchId,
-          groupCol, textCol, k, statsDir)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      heavyHitterBatch(_, _, groupCol, textCol, k, statsDir))
 
   /** One micro-batch of [[heavyHitterSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -478,13 +439,8 @@ object StreamingEvents {
   def countMinSink(docs: DataFrame, groupCol: String, textCol: String,
       depth: Int, width: Int, cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) countMinBatch(batch.toDF(), batchId,
-          groupCol, textCol, depth, width, cellsDir)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      countMinBatch(_, _, groupCol, textCol, depth, width, cellsDir))
 
   /** One micro-batch of [[countMinSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -512,13 +468,8 @@ object StreamingEvents {
   def amsF2Sink(docs: DataFrame, groupCol: String, textCol: String,
       counters: Int, cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) amsF2Batch(batch.toDF(), batchId, groupCol,
-          textCol, counters, cellsDir)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      amsF2Batch(_, _, groupCol, textCol, counters, cellsDir))
 
   /** One micro-batch of [[amsF2Sink]] — package-private so the parity
     * spec can drive the identical code path directly. */
@@ -556,13 +507,8 @@ object StreamingEvents {
   def bradleyTerrySink(votes: DataFrame, winnerCol: String,
       loserCol: String, cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    votes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bradleyTerryBatch(batch.toDF(), batchId,
-          winnerCol, loserCol, cellsDir)
-      }
-      .start()
+    batchSink(votes, checkpointDir)(
+      bradleyTerryBatch(_, _, winnerCol, loserCol, cellsDir))
 
   /** One micro-batch of [[bradleyTerrySink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -603,13 +549,8 @@ object StreamingEvents {
       labelCol: String, buckets: Int, cellsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) hosmerLemeshowBatch(batch.toDF(), batchId,
-          probCol, labelCol, buckets, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      hosmerLemeshowBatch(_, _, probCol, labelCol, buckets, cellsDir))
 
   /** One micro-batch of [[hosmerLemeshowSink]] — package-private so
     * the parity spec can drive the identical code path directly. */
@@ -645,13 +586,8 @@ object StreamingEvents {
   def spiegelhalterSink(rows: DataFrame, probCol: String,
       labelCol: String, cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) spiegelhalterBatch(batch.toDF(), batchId,
-          probCol, labelCol, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      spiegelhalterBatch(_, _, probCol, labelCol, cellsDir))
 
   /** One micro-batch of [[spiegelhalterSink]] — package-private so
     * the parity spec can drive the identical code path directly. The
@@ -710,13 +646,8 @@ object StreamingEvents {
       groups.distinct == groups,
       s"jonckheereSink: need >= 2 sorted distinct group levels, " +
         s"got $groups")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) jonckheereBatch(batch.toDF(), batchId,
-          groupCol, valueCol, groups, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      jonckheereBatch(_, _, groupCol, valueCol, groups, cellsDir))
   }
 
   /** One micro-batch of [[jonckheereSink]] — package-private so the
@@ -765,13 +696,8 @@ object StreamingEvents {
   def momentSink(vectors: DataFrame, vecCol: String, dim: Int,
       momentsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) momentBatch(batch.toDF(), batchId, vecCol,
-          dim, momentsDir)
-      }
-      .start()
+    batchSink(vectors, checkpointDir)(
+      momentBatch(_, _, vecCol, dim, momentsDir))
 
   /** One micro-batch of [[momentSink]] — package-private so the parity
     * spec can drive the identical code path directly. */
@@ -814,13 +740,8 @@ object StreamingEvents {
   def dailyAggSink(events: DataFrame, keyCol: String, tsCol: String,
       valueCol: String, dailyDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) dailyAggBatch(batch.toDF(), batchId, keyCol,
-          tsCol, valueCol, dailyDir)
-      }
-      .start()
+    batchSink(events, checkpointDir)(
+      dailyAggBatch(_, _, keyCol, tsCol, valueCol, dailyDir))
 
   /** One micro-batch of [[dailyAggSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -936,13 +857,7 @@ object StreamingEvents {
   def categoryCellSink(rows: DataFrame, catCol: String,
       cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) categoryCellBatch(batch.toDF(), batchId,
-          catCol, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(categoryCellBatch(_, _, catCol, cellsDir))
 
   /** One micro-batch of [[categoryCellSink]] — package-private so the
     * parity spec drives the identical code path. */
@@ -994,13 +909,7 @@ object StreamingEvents {
       checkpointDir: String,
       c: graft.events.EventCols = graft.events.EventCols())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) userWeekBatch(batch.toDF(), batchId,
-          weeksDir, c)
-      }
-      .start()
+    batchSink(events, checkpointDir)(userWeekBatch(_, _, weeksDir, c))
 
   /** One micro-batch of [[userWeekSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1033,13 +942,7 @@ object StreamingEvents {
       checkpointDir: String,
       c: graft.events.EventCols = graft.events.EventCols())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) cohortValueBatch(batch.toDF(), batchId,
-          valsDir, c)
-      }
-      .start()
+    batchSink(events, checkpointDir)(cohortValueBatch(_, _, valsDir, c))
 
   /** One micro-batch of [[cohortValueSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1076,13 +979,8 @@ object StreamingEvents {
       fragDir: String, checkpointDir: String,
       c: graft.events.EventCols = graft.events.EventCols())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) sessionStatsBatch(batch.toDF(), batchId,
-          timeoutSec, fragDir, c)
-      }
-      .start()
+    batchSink(events, checkpointDir)(
+      sessionStatsBatch(_, _, timeoutSec, fragDir, c))
 
   /** One micro-batch of [[sessionStatsSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1156,13 +1054,8 @@ object StreamingEvents {
       fragDir: String, checkpointDir: String,
       c: graft.events.EventCols = graft.events.EventCols())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) sequentialRuleBatch(batch.toDF(), batchId,
-          timeoutSec, fragDir, c)
-      }
-      .start()
+    batchSink(events, checkpointDir)(
+      sequentialRuleBatch(_, _, timeoutSec, fragDir, c))
 
   /** One micro-batch of [[sequentialRuleSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1239,13 +1132,8 @@ object StreamingEvents {
       weightCol: String, k: Int, seed: String, sampleDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) prioritySampleBatch(batch.toDF(), batchId,
-          idCol, weightCol, k, seed, sampleDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      prioritySampleBatch(_, _, idCol, weightCol, k, seed, sampleDir))
 
   /** One micro-batch of [[prioritySampleSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1284,13 +1172,8 @@ object StreamingEvents {
   def driftMonitorSink(rows: DataFrame, valueCol: String,
       edges: Array[Double], statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) driftMonitorBatch(batch.toDF(), batchId,
-          valueCol, edges, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      driftMonitorBatch(_, _, valueCol, edges, statsDir))
 
   /** One micro-batch of [[driftMonitorSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1355,13 +1238,8 @@ object StreamingEvents {
   def liftMonitorSink(rows: DataFrame, scoreCol: String, labelCol: String,
       edges: Array[Double], statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) liftMonitorBatch(batch.toDF(), batchId,
-          scoreCol, labelCol, edges, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      liftMonitorBatch(_, _, scoreCol, labelCol, edges, statsDir))
 
   /** One micro-batch of [[liftMonitorSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1404,13 +1282,8 @@ object StreamingEvents {
   def splitBalanceSink(rows: DataFrame, splitCol: String,
       stratumCol: String, statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) splitBalanceBatch(batch.toDF(), batchId,
-          splitCol, stratumCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      splitBalanceBatch(_, _, splitCol, stratumCol, statsDir))
 
   /** One micro-batch of [[splitBalanceSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1450,13 +1323,8 @@ object StreamingEvents {
   def fairnessSink(rows: DataFrame, groupCol: String, predCol: String,
       labelCol: String, statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) fairnessBatch(batch.toDF(), batchId,
-          groupCol, predCol, labelCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      fairnessBatch(_, _, groupCol, predCol, labelCol, statsDir))
 
   /** One micro-batch of [[fairnessSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1496,13 +1364,7 @@ object StreamingEvents {
   def conformalSink(rows: DataFrame, scoreCol: String, statsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) conformalBatch(batch.toDF(), batchId,
-          scoreCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(conformalBatch(_, _, scoreCol, statsDir))
 
   /** One micro-batch of [[conformalSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1538,13 +1400,8 @@ object StreamingEvents {
   def scriptMixSink(docs: DataFrame, idCol: String, textCol: String,
       statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) scriptMixBatch(batch.toDF(), batchId,
-          idCol, textCol, statsDir)
-      }
-      .start()
+    batchSink(docs, checkpointDir)(
+      scriptMixBatch(_, _, idCol, textCol, statsDir))
 
   /** One micro-batch of [[scriptMixSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1600,13 +1457,7 @@ object StreamingEvents {
   def keySkewSink(rows: DataFrame, keyCol: String, statsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) keySkewBatch(batch.toDF(), batchId, keyCol,
-          statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(keySkewBatch(_, _, keyCol, statsDir))
 
   /** One micro-batch of [[keySkewSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1639,13 +1490,7 @@ object StreamingEvents {
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(cols.nonEmpty, "nullRateSink: no columns")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) nullRateBatch(batch.toDF(), batchId, cols,
-          statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(nullRateBatch(_, _, cols, statsDir))
   }
 
   /** One micro-batch of [[nullRateSink]] — package-private so the
@@ -1687,13 +1532,7 @@ object StreamingEvents {
   def benfordSink(rows: DataFrame, valueCol: String, statsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) benfordBatch(batch.toDF(), batchId, valueCol,
-          statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(benfordBatch(_, _, valueCol, statsDir))
 
   /** One micro-batch of [[benfordSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1729,13 +1568,8 @@ object StreamingEvents {
   def confusionSink(rows: DataFrame, predCol: String, labelCol: String,
       statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) confusionBatch(batch.toDF(), batchId,
-          predCol, labelCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      confusionBatch(_, _, predCol, labelCol, statsDir))
 
   /** One micro-batch of [[confusionSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -1775,13 +1609,8 @@ object StreamingEvents {
   def welchSink(rows: DataFrame, variantCol: String, valueCol: String,
       statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) welchBatch(batch.toDF(), batchId, variantCol,
-          valueCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      welchBatch(_, _, variantCol, valueCol, statsDir))
 
   /** One micro-batch of [[welchSink]] — package-private so the parity
     * spec can drive the identical code path directly. */
@@ -1822,13 +1651,8 @@ object StreamingEvents {
   def ucbSink(rows: DataFrame, armCol: String, rewardCol: String,
       statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) ucbBatch(batch.toDF(), batchId, armCol,
-          rewardCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      ucbBatch(_, _, armCol, rewardCol, statsDir))
 
   /** One micro-batch of [[ucbSink]] — package-private so the parity
     * spec can drive the identical code path directly. */
@@ -1864,13 +1688,8 @@ object StreamingEvents {
       variantCol: String, convertedCol: String, statsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bhFdrBatch(batch.toDF(), batchId, groupCols,
-          variantCol, convertedCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      bhFdrBatch(_, _, groupCols, variantCol, convertedCol, statsDir))
 
   /** One micro-batch of [[bhFdrSink]] — package-private so the parity
     * spec can drive the identical code path directly. */
@@ -1914,13 +1733,8 @@ object StreamingEvents {
       variantCol: String, convertedCol: String, statsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bhFdrBatch(batch.toDF(), batchId, groupCols,
-          variantCol, convertedCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      bhFdrBatch(_, _, groupCols, variantCol, convertedCol, statsDir))
 
   /** The published view over a [[msprtSink]] directory: merged segment
     * counters through the identical closed-form mSPRT. */
@@ -1942,13 +1756,8 @@ object StreamingEvents {
       variantCol: String, convertedCol: String, statsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) bhFdrBatch(batch.toDF(), batchId, strataCols,
-          variantCol, convertedCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      bhFdrBatch(_, _, strataCols, variantCol, convertedCol, statsDir))
 
   /** The published view over a [[cmhSink]] directory: merged stratum
     * counters through the identical pooled test (degenerate strata
@@ -1975,13 +1784,8 @@ object StreamingEvents {
   def agreementSink(rows: DataFrame, labelACol: String, labelBCol: String,
       statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) agreementBatch(batch.toDF(), batchId,
-          labelACol, labelBCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      agreementBatch(_, _, labelACol, labelBCol, statsDir))
 
   /** One micro-batch of [[agreementSink]] — package-private so the
     * parity spec can drive the identical code path directly. NULL on
@@ -2027,13 +1831,8 @@ object StreamingEvents {
       raterCol: String, labelCol: String, statsDir: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) krippendorffBatch(batch.toDF(), batchId,
-          itemCol, raterCol, labelCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      krippendorffBatch(_, _, itemCol, raterCol, labelCol, statsDir))
 
   /** One micro-batch of [[krippendorffSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -2083,13 +1882,8 @@ object StreamingEvents {
       givenCol: String, classCol: String, pCol: String,
       statsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) confidentJointBatch(batch.toDF(), batchId,
-          idCol, givenCol, classCol, pCol, statsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      confidentJointBatch(_, _, idCol, givenCol, classCol, pCol, statsDir))
 
   /** One micro-batch of [[confidentJointSink]] — package-private so
     * the parity spec can drive the identical code path directly. */
@@ -2134,13 +1928,8 @@ object StreamingEvents {
   def lineIndexSink(rows: DataFrame, idCol: String, textCol: String,
       indexDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) lineIndexBatch(batch.toDF(), batchId,
-          idCol, textCol, indexDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      lineIndexBatch(_, _, idCol, textCol, indexDir))
 
   /** One micro-batch of [[lineIndexSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -2177,13 +1966,8 @@ object StreamingEvents {
       doses.distinct == doses,
       s"cochranArmitageSink: need >= 2 sorted distinct dose levels, " +
         s"got $doses")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) cochranArmitageBatch(batch.toDF(), batchId,
-          doseCol, convertedCol, doses, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      cochranArmitageBatch(_, _, doseCol, convertedCol, doses, cellsDir))
   }
 
   /** One micro-batch of [[cochranArmitageSink]] — package-private so
@@ -2224,13 +2008,7 @@ object StreamingEvents {
   def valueCellSink(rows: DataFrame, valueCol: String,
       cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) valueCellBatch(batch.toDF(), batchId,
-          valueCol, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(valueCellBatch(_, _, valueCol, cellsDir))
 
   /** One micro-batch of [[valueCellSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -2327,15 +2105,9 @@ object StreamingEvents {
       checkpointDir: String, probes: Int = 2,
       maxBucketPoints: Long = 100000L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.ann.Similarity.knnGraphIncrement(batch.toDF(), idCol,
-            vecCol, centroids, dim, k, storeDir, batchId, probes,
-            maxBucketPoints)
-      }
-      .start()
+    batchSink(vectors, checkpointDir)((batch, batchId) =>
+      graft.ann.Similarity.knnGraphIncrement(batch, idCol, vecCol,
+        centroids, dim, k, storeDir, batchId, probes, maxBucketPoints))
 
   /** The published view over a [[knnGraphSink]] store: each source's
     * edges from the LATEST batch that recomputed it — an unaffected
@@ -2343,30 +2115,14 @@ object StreamingEvents {
     * changed, so this equals the full-rebuild [[graft.ann.Similarity
     * .knnGraph]] over the union corpus. */
   def knnGraphView(spark: org.apache.spark.sql.SparkSession,
-      storeDir: String): DataFrame = {
-    val edges = graft.ann.Similarity.readKnnEdges(spark, storeDir)
+      storeDir: String): DataFrame =
     // tombstoned sources ([[graft.ann.Similarity.knnGraphDelete]])
     // vanish; deleted NEIGHBORS need no handling here — any source
     // holding a stale edge to a deleted point shared a probed cell
     // with it, so the delete recomputed that source's rows
-    val live = graft.ann.Similarity.knnTombstones(spark, storeDir)
-      .fold(edges)(t => edges.join(t.select(col("vec_id")).distinct(),
-        Seq("vec_id"), "left_anti"))
-    // latest batch per source via ONE window over ONE scan — the old
-    // groupBy(max) + join-back scanned the edge store twice and
-    // shuffled twice for the same row set
-    import org.apache.spark.sql.expressions.Window
-    live.withColumn("__mx", max(col("batch_id"))
-        .over(Window.partitionBy(col("vec_id"))))
-      .filter(col("batch_id") === col("__mx"))
-      // rk = 0 rows are the delete's EMPTY-recompute sentinels: they
-      // win the latest-batch selection (masking the stale pre-delete
-      // rows) and are then dropped here
-      .filter(col("rk") >= 1)
-      .select(col("vec_id"), col("rk"), col("neighbor_id"),
-        col("cosine"))
+    graft.ann.Similarity.KnnStore.latest(
+        graft.ann.Similarity.KnnStore.edges(storeDir).live(spark))
       .orderBy(col("vec_id"), col("rk"))
-  }
 
   /** D34 over the SAME [[valueCellSink]] store: the Jensen–Shannon
     * overlap divergence through the batch finish verbatim (micro-grid
@@ -2459,13 +2215,7 @@ object StreamingEvents {
   def eventTypeCellSink(events: DataFrame, cellsDir: String,
       checkpointDir: String, c: EventCols = EventCols())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) eventTypeCellBatch(batch.toDF(), batchId,
-          cellsDir, c)
-      }
-      .start()
+    batchSink(events, checkpointDir)(eventTypeCellBatch(_, _, cellsDir, c))
 
   /** One micro-batch of [[eventTypeCellSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -2506,13 +2256,7 @@ object StreamingEvents {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(cols.nonEmpty && cols.distinct == cols,
       s"nullRateCellSink: need >= 1 distinct declared columns, got $cols")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) nullRateCellBatch(batch.toDF(), batchId,
-          cols, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(nullRateCellBatch(_, _, cols, cellsDir))
   }
 
   /** One micro-batch of [[nullRateCellSink]] — package-private so the
@@ -2600,13 +2344,8 @@ object StreamingEvents {
   def twaCellSink(events: DataFrame, keyCol: String, tsCol: String,
       valueCol: String, cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) twaCellBatch(batch.toDF(), batchId, keyCol,
-          tsCol, valueCol, cellsDir)
-      }
-      .start()
+    batchSink(events, checkpointDir)(
+      twaCellBatch(_, _, keyCol, tsCol, valueCol, cellsDir))
 
   /** One micro-batch of [[twaCellSink]] — package-private so the
     * parity spec can drive the identical code path directly. */
@@ -2785,13 +2524,8 @@ object StreamingEvents {
     require(treatments.size >= 2 && treatments.distinct == treatments,
       s"friedmanSink: need >= 2 distinct declared treatments, " +
         s"got $treatments")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) friedmanBatch(batch.toDF(), batchId,
-          blockCol, treatCol, valueCol, treatments, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      friedmanBatch(_, _, blockCol, treatCol, valueCol, treatments, cellsDir))
   }
 
   /** One micro-batch of [[friedmanSink]] — package-private so the
@@ -2913,13 +2647,8 @@ object StreamingEvents {
   def kendallTauSink(rows: DataFrame, groupCol: String, xCol: String,
       yCol: String, cellsDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (!batch.isEmpty) kendallTauBatch(batch.toDF(), batchId,
-          groupCol, xCol, yCol, cellsDir)
-      }
-      .start()
+    batchSink(rows, checkpointDir)(
+      kendallTauBatch(_, _, groupCol, xCol, yCol, cellsDir))
 
   /** One micro-batch of [[kendallTauSink]] — package-private so the
     * parity spec can drive the identical code path directly. */

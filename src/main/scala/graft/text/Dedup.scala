@@ -631,82 +631,43 @@ object Dedup {
     * ([[graft.streaming.StreamingEvents.incrementalDedupSink]]) appends
     * one partition directory per micro-batch, so over a long-running
     * query the driver's file/partition listing cost per batch grows
-    * without bound (the classic small-file problem — the reference ships
-    * the same concern as partition retention,
-    * diamond/load/ParquetDataLoader.scala:1091-1103, and its README asks
-    * for a small-file "stitching function"). Run this with the ingest
-    * query STOPPED (a maintenance window), then restart.
-    *
-    * Crash-safe by construction: the consolidated rows are written to a
-    * NEW partition `batch_id = min(existing) - 1` — compaction ids count
-    * DOWN from the seed convention (-1) while stream batch ids count up
-    * from 0, so the target never collides with a future micro-batch and
-    * never overwrites a directory the rewrite is concurrently reading —
-    * and the source partitions are deleted only after the write commits.
-    * A crash in between leaves duplicate index rows, which verdicts are
-    * insensitive to ([[incrementalDedupIndexed]] aggregates with `min` /
-    * `count_distinct`); the next compaction's `distinct` genuinely
-    * absorbs them (identical rows collapse), so storage and scan cost
-    * recover rather than carrying the duplicates forever. The distinct
-    * is one extra exchange, acceptable in a maintenance window, and also
-    * collapses docs legitimately re-indexed verbatim across batches.
+    * without bound (the classic small-file problem). Run this with the
+    * ingest query STOPPED (a maintenance window), then restart.
+    * Layout, ledger, crash windows and target ids follow the
+    * [[graft.store.BatchStore]] contract; the consolidation step is a
+    * `distinct` (absorbing crash-window leftovers and docs re-indexed
+    * verbatim across batches) into `targetFiles` files. A single
+    * partition is left alone unless it holds more than `targetFiles`
+    * files (e.g. a seed written by a wide-parallelism job) or a
+    * tombstone ledger is pending.
     *
     * Returns the consolidated partition's batch id (or the single
     * existing id when there is nothing to compact). */
   def compactDedupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, targetFiles: Int = 8): Long = {
     require(targetFiles >= 1, s"targetFiles must be >= 1, got $targetFiles")
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(path), s"compactDedupIndex: no index at $indexDir")
-    val batchDirs = fs.listStatus(path).filter(_.isDirectory)
-      .map(_.getPath).filter(_.getName.startsWith("batch_id="))
-    require(batchDirs.nonEmpty,
-      s"compactDedupIndex: $indexDir has no batch_id=* partitions — not " +
-        "a partitioned dedup index (seed it via buildDedupIndex into " +
-        "batch_id=-1)")
-    val ids = batchDirs.map(_.getName.stripPrefix("batch_id=").toLong)
-    // a single partition still needs consolidation when IT carries more
-    // files than the target (e.g. a seed written by a wide-parallelism
-    // job) — the small-file listing cost this function exists to bound
-    // does not care how the files are grouped; a pending tombstone
-    // ledger ([[deleteFromDedupIndex]]) always needs applying
-    val tombDir = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    val tombs = dedupTombstones(spark, indexDir)
-    if (batchDirs.length == 1 && tombs.isEmpty &&
-        fs.listStatus(batchDirs.head)
-          .count(_.getPath.getName.startsWith("part-")) <= targetFiles)
-      return ids.head // already compact
-    val compactTo = ids.min - 1
-    val all = spark.read.parquet(indexDir)
-      .drop("batch_id") // re-materialized by the target directory name
-    // apply the tombstone ledger, then clear it below: the compacted
-    // index no longer contains the deleted docs, so every crash window
-    // stays correct (the doc_id anti-join is idempotent against an
-    // index that lacks those docs) and a cleared ledger re-opens the
-    // ids for legitimate re-ingestion
-    val alive = tombs.fold(all)(t => all.join(
-      t.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti"))
-    alive
-      .distinct()       // absorb crash-window leftovers (see scaladoc)
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(s"$indexDir/batch_id=$compactTo")
-    batchDirs.foreach(d => fs.delete(d, true))
-    if (fs.exists(tombDir)) fs.delete(tombDir, true)
-    compactTo
+    val fs = new org.apache.hadoop.fs.Path(indexDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    dedupStore(indexDir).compact(spark, "compactDedupIndex",
+      fits = d => fs.listStatus(d)
+        .count(_.getPath.getName.startsWith("part-")) <= targetFiles)(
+      _.drop("batch_id").distinct().repartition(targetFiles))
   }
 
-  /** The tombstone ledger of a delete-maintained dedup index — `None`
-    * until the first [[deleteFromDedupIndex]]. Lives in the SIBLING
-    * directory `<indexDir>__tombstones` (the friedman-ledger layout
-    * precedent): a subdirectory inside `indexDir` would break the
-    * index's own `batch_id=*` partition discovery. */
-  private[graft] def dedupTombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"${indexDir}__tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
+  /** The dedup index as a [[graft.store.BatchStore]]: its schema is
+    * the [[buildDedupIndex]] projection with `doc_id` as long (the
+    * ledger's key type), and the ledger is the sibling
+    * `<indexDir>__tombstones`. */
+  private[graft] def dedupStore(indexDir: String): graft.store.BatchStore = {
+    import org.apache.spark.sql.types._
+    graft.store.BatchStore(indexDir, StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("text_md5", StringType),
+      StructField("sig", ArrayType(LongType)),
+      StructField("band", IntegerType),
+      StructField("band_hash", StringType),
+      StructField("batch_id", LongType))), "doc_id",
+      graft.store.BatchStore.ledgerBeside(indexDir))
   }
 
   /** X190: TOMBSTONE DELETES in the persisted dedup index — the X188
@@ -714,24 +675,19 @@ object Dedup {
     * verdicting future batches as duplicates of it, and an append-only
     * index would keep matching it forever. Unlike the k-NN store no
     * recompute is needed (a doc's signature rows are independent), so
-    * a delete is ONE ledger write: the dying ids land under
-    * `<indexDir>__tombstones/batch_id=N` and [[readDedupIndex]]
-    * anti-joins them. Same resurrection contract as the k-NN store:
-    * re-ingesting a tombstoned id fails loud in the sink
+    * a delete is ONE ledger write ([[graft.store.BatchStore]]) that
+    * [[readDedupIndex]] anti-joins. Re-ingesting a tombstoned id fails
+    * loud in the sink
     * ([[graft.streaming.StreamingEvents.incrementalDedupSink]]) until
-    * [[compactDedupIndex]] applies + clears the ledger. Replays
-    * overwrite their own batch directory: idempotent. Deleting an
-    * unknown id is a harmless tombstone. */
+    * [[compactDedupIndex]] applies + clears the ledger. */
   def deleteFromDedupIndex(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, deleted: DataFrame, idCol: String,
       batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"deleteFromDedupIndex: no index at $indexDir")
-    deleted.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .write.mode("overwrite")
-      .parquet(s"${indexDir}__tombstones/batch_id=$batchId")
-    ()
+    val store = dedupStore(indexDir)
+    require(store.exists(spark), s"deleteFromDedupIndex: no index at $indexDir")
+    store.tombstone(
+      deleted.select(col(idCol).cast("long").as("doc_id")).distinct(),
+      batchId)
   }
 
   /** The canonical read of a delete-maintained dedup index: the
@@ -740,12 +696,8 @@ object Dedup {
     * callers, the store gate) go through this so a delete is visible
     * everywhere at once. */
   def readDedupIndex(spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): DataFrame = {
-    val idx = spark.read.parquet(indexDir)
-    dedupTombstones(spark, indexDir).fold(idx)(t =>
-      idx.join(t.select(col("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti"))
-  }
+      indexDir: String): DataFrame =
+    dedupStore(indexDir).live(spark)
 
   /** X20 (index form): incremental cross-corpus dedup answered from a
     * [[buildDedupIndex]] table alone — the corpus documents are never

@@ -379,6 +379,39 @@ class StreamingSpec extends SparkSpec {
     rows(StreamingEvents.vocabularyView(spark, s"$tmp/stats")) shouldBe batch
   }
 
+  it should "skip empty micro-batches and re-run a replayed batch under its own id in batchSink" in {
+    implicit val sq = spark.sqlContext
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val in = MemoryStream[Long]
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    def start() = StreamingEvents.batchSink(in.toDF(), s"$tmp/ckpt") {
+      (batch, batchId) =>
+        calls.add(batchId)
+        batch.write.mode("overwrite").parquet(s"$tmp/out/batch_id=$batchId")
+    }
+    def dirs() = new java.io.File(s"$tmp/out").list().sorted.toSeq
+    val q = start()
+    try {
+      in.addData(1L, 2L); q.processAllAvailable()
+      in.addData(); q.processAllAvailable() // micro-batch 1 is empty
+      in.addData(3L); q.processAllAvailable()
+    } finally q.stop()
+    calls.asScala.toSeq shouldBe Seq(0L, 2L)
+    dirs() shouldBe Seq("batch_id=0", "batch_id=2")
+    // a crash after the writes but before the checkpoint commit: the
+    // restarted query re-runs batch 2 under the same id, which
+    // overwrites its own directory
+    for (f <- Seq("2", ".2.crc"))
+      new java.io.File(s"$tmp/ckpt/commits/$f").delete()
+    val replay = start()
+    try replay.processAllAvailable() finally replay.stop()
+    calls.asScala.toSeq shouldBe Seq(0L, 2L, 2L)
+    dirs() shouldBe Seq("batch_id=0", "batch_id=2")
+    spark.read.parquet(s"$tmp/out").select("value").as[Long].collect()
+      .sorted shouldBe Array(1L, 2L, 3L)
+  }
+
   it should "keep every true heavy hitter in the merged sketch view" in {
     implicit val sq = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft_shh").toString
